@@ -3,6 +3,7 @@ from __future__ import annotations
 from ._shared import DataFrame, F, SparkSession, _sum_cents, _sum_cents_sql, blocked_jaccard_pairs, clean_text, connected_components, decontaminate, exact_dup_groups, load, near_dup_pairs, pack_shards, prune_components, register_views, session_agg, simhash_candidates, sliding_agg, split_corpus, token_count, tumbling_agg
 from ..operators.dedup import shingles
 from ..operators.sketches import bloom_decontaminate
+from ..plans.compose import StageCache, release_when_unreachable
 
 
 
@@ -561,17 +562,28 @@ FROM scored QUALIFY rank <= 10
 """
 
 
+def _component_pairs(docs: DataFrame, cache: StageCache) -> DataFrame:
+    """The blocked n-gram pair stage under the component entries, with its
+    persists in the ENTRY's ``cache``. The entry derives its result from
+    the pairs and drops them; a pair-stage-owned cache would then release
+    on return, before the driver's action reads it. The entry ties
+    ``cache`` to its result instead."""
+    return blocked_jaccard_pairs(
+        docs, ["lang", "source"], threshold=0.2, cache=cache,
+        broadcast_routing=True,  # (lang, source): ~10^2 blocks by construction
+        branch_gate=True,
+    )
+
+
 def q_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
     """DEDUP-COMPONENTS: near-dup pairs → transitive dedup groups via
     iterative min-label propagation (similarity isn't transitive; groups
     are the connected components of the pair graph). Fed from the blocked
     n-gram pairs so the DuckDB oracle can recompute the same graph with a
     recursive CTE + min-over-reachable-set."""
-    pairs = blocked_jaccard_pairs(
-        load(spark, sf, "documents"), ["lang", "source"], threshold=0.2,
-        broadcast_routing=True,  # (lang, source): ~10^2 blocks by construction
-    )
-    return connected_components(pairs)
+    cache = StageCache()
+    pairs = _component_pairs(load(spark, sf, "documents"), cache)
+    return release_when_unreachable(connected_components(pairs), cache)
 
 
 ORACLE_DEDUP_COMPONENTS = r"""
@@ -607,9 +619,9 @@ def q_dedup_prune(spark: SparkSession, sf: str) -> DataFrame:
     component, unpaired docs untouched). Composes blocked n-gram pairs →
     connected components → anti-join, all with DuckDB-recomputable math."""
     docs = load(spark, sf, "documents")
-    pairs = blocked_jaccard_pairs(docs, ["lang", "source"], threshold=0.2,
-                                  broadcast_routing=True)
-    return prune_components(docs, pairs).select("doc_id", "lang", "source")
+    cache = StageCache()
+    out = prune_components(docs, _component_pairs(docs, cache))
+    return release_when_unreachable(out.select("doc_id", "lang", "source"), cache)
 
 
 ORACLE_DEDUP_PRUNE = r"""
@@ -650,10 +662,10 @@ def q_dedup_prune_best(spark: SparkSession, sf: str) -> DataFrame:
     oracle: the same recursive component search plus a per-component
     argmax window."""
     docs = load(spark, sf, "documents")
-    pairs = blocked_jaccard_pairs(docs, ["lang", "source"], threshold=0.2,
-                                  broadcast_routing=True)
-    return prune_components(docs, pairs, score_col="n_chars").select(
-        "doc_id", "lang", "source", "n_chars"
+    cache = StageCache()
+    out = prune_components(docs, _component_pairs(docs, cache), score_col="n_chars")
+    return release_when_unreachable(
+        out.select("doc_id", "lang", "source", "n_chars"), cache
     )
 
 

@@ -803,7 +803,10 @@ def blocked_jaccard_pairs(
       3.10 → 1.84 s for the standalone pair frame,
       tools/ab_branchgate_r13.py); a mixed corpus keeps today's exact
       two-branch shape. Output is identical in all cases (the branches
-      partition blocks by the same predicate the gate measures).
+      partition blocks by the same predicate the gate measures). On the
+      all-small route the (block, tok) frequency and block-cost persists
+      release right after the gate's collect — nothing reads them — so
+      ``cache`` keeps only the token table.
       Default ``False`` keeps the builder fully lazy for callers that
       construct plans they may never run.
     Blocks at or under
@@ -867,11 +870,15 @@ def blocked_jaccard_pairs(
         )
     )
     # per-block document frequency; its per-block Σ C(df,2) IS the exact
-    # all-pairs join cost, measured in-plan (grain: block — tiny)
-    df_tok = cache(
+    # all-pairs join cost, measured in-plan (grain: block — tiny). Under
+    # branch_gate both persist through a GATE-scoped cache: on the
+    # all-small route nothing reads them after the gate's collect, so
+    # they release right there and ``cache`` keeps only toks
+    gate_cache = StageCache() if branch_gate else cache
+    df_tok = gate_cache(
         toks.groupBy(*block_cols, "tok").agg(F.count(F.lit(1)).alias("_df"))
     )
-    block_cost = cache(
+    block_cost = gate_cache(
         df_tok.groupBy(*block_cols).agg(
             F.sum(F.col("_df") * (F.col("_df") - 1) / 2)
             .cast("long")
@@ -913,6 +920,7 @@ def blocked_jaccard_pairs(
                 F.max("_cost").alias("mx"),
             ).collect()[0]
         except BaseException:
+            gate_cache.release()
             if own_cache:
                 cache.release()
             raise
@@ -923,6 +931,12 @@ def blocked_jaccard_pairs(
         build_small = _g["mn"] is None or _g["mn"] <= allpairs_max_pairs
         if broadcast_routing is None:
             broadcast_routing = _g["nb"] <= MAX_BROADCAST_BLOCKS
+        if build_big:
+            # the prefix branch reads df_tok (and the routing join
+            # block_cost): they live as long as the pair stage
+            cache.adopt(gate_cache)
+        else:
+            gate_cache.release()
     if broadcast_routing is None:
         # The measuring job rides the query's OWN first materialization
         # (r8 verdict item 2): block_cost is StageCached just above, so
@@ -1174,11 +1188,10 @@ def _union_find_batches(name_a: str, name_b: str):
 
 
 def _contracted_components(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Two-phase union-find as ONE LAZY DAG — the default
-    ``connected_components`` path (VERDICT r11 item 2: the eager
-    count-gate + driver collect ran the whole upstream pair chain at
-    DataFrame-CONSTRUCTION time; this plan runs nothing until the
-    caller's first action).
+    """Two-phase union-find as ONE LAZY DAG with ONE consumer of the pair
+    plan — the default ``connected_components`` path. Nothing runs until
+    the caller's first action, and no persist is needed: the pair plan
+    feeds phase 1 once, so it executes once.
 
     Phase 1 (``mapInPandas``, per existing partition, NO shuffle):
     local union-find per task → one ``(node, local_root)`` star edge
@@ -1187,81 +1200,39 @@ def _contracted_components(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     contracts to its root), and there are at most V of them per
     partition — the classic local-contraction step.
 
-    Phase 2 (r13 — the ROOT GRAPH, not the node forest, goes through
-    the single merge task): group the phase-1 star edges by node — a
-    node crossing partition boundaries carries several local roots, and
-    those roots must unify — and emit one ``(root, min_root)`` edge per
-    local root per node (self-edge when a node has one root, so
-    isolated components survive). The single union-find task then runs
-    over ROOT-grain edges only: its dict holds O(distinct local roots)
-    ≈ O(components + partition-boundary crossings), not O(dup nodes) —
-    the r12 shape's merge held every dup node in one executor dict,
-    which is the ceiling VERDICT r12 item 1 flagged for
-    boilerplate-heavy crawls. Final labels attach DISTRIBUTED: the
-    per-node min local root joins the (tiny, AQE-broadcast) root→final
-    map; no single task ever materializes node-grain state.
+    Phase 2 (``repartition(1)`` + the same union-find): merge the
+    contracted forests and emit ``(doc_id, component_id)`` directly.
+    The shuffle moves forest edges (≤ Σ per-partition distinct nodes ≈
+    O(dup nodes)), never the raw edge list. Labels are component
+    minimum ids in both phases (min-root union), the same labels the
+    distributed loop converges to — pinned in tests.
 
-    Labels are component minimum ids at every level (min-root union;
-    the global minimum node is its own local root in every partition
-    that sees it, so the root component's minimum IS the node minimum)
-    — the same labels the distributed loop converges to, pinned in
-    tests.
-
-    Cluster posture note: the merge task is root-graph-sized, so the
-    remaining ceiling is one executor holding the contracted quotient
-    graph — components themselves, not their members; for graphs past
-    even that, pass ``checkpoint_dir`` — the durable distributed label
-    loop has per-round parquet state and no single-task step."""
+    Single-task bound: the merge task's dict holds one entry per
+    distinct dup node (every node that appears in some pair) —
+    O(dup nodes) on one executor, never the driver. Graphs past what
+    one executor holds take the route with no single-task step: pass
+    ``checkpoint_dir`` and :func:`connected_components` runs the
+    durable distributed label loop instead."""
     dt = pairs.schema[id_a].dataType
     forest_schema = T.StructType(
         [T.StructField("src", dt), T.StructField("dst", dt)]
     )
-    rootmap_schema = T.StructType(
-        [T.StructField("_root", dt), T.StructField("_final", dt)]
+    out_schema = T.StructType(
+        [T.StructField("doc_id", dt), T.StructField("component_id", dt)]
     )
     forest = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).mapInPandas(_union_find_batches("src", "dst"), forest_schema)
     # the result stays an ORDINARY lazy frame: the labels plan is
-    # pairs + narrow map/agg nodes, so consumers nest it at pair-plan
+    # pairs + two narrow map nodes, so consumers nest it at pair-plan
     # cost. Compositions whose pair plan is itself deep (PIPE-CORPUS)
     # bound that cost at the fan-out ROOT with a StageCache.cut() on
     # the pair stage's input — cutting here instead would freeze the
     # (possibly broadcast-bearing) pair plan and fire its exchanges at
     # construction time (see plans/compose.py:StageCache.cut).
-    # node_roots feeds TWO consumers (the root-edge subtree and the
-    # final label join) — without a persist the whole pair subtree
-    # executes twice (A/B-measured +0.9 s at sf0.1, and 2× the pair
-    # join at scale). The persist is LAZY (materializes at the caller's
-    # first action — construction runs nothing) and node-grain narrow;
-    # it releases with the returned frame's lifecycle.
-    from ..plans.compose import StageCache, release_when_unreachable
-
-    _cc_cache = StageCache()
-    node_roots = _cc_cache(
-        forest.groupBy("src").agg(
-            F.min("dst").alias("_min_r"), F.collect_set("dst").alias("_rs")
-        )
+    return forest.repartition(1).mapInPandas(
+        _union_find_batches("doc_id", "component_id"), out_schema
     )
-    root_edges = node_roots.select(
-        F.explode("_rs").alias("_a"), F.col("_min_r").alias("_b")
-    )
-    rootmap = root_edges.repartition(1).mapInPandas(
-        _union_find_batches("_root", "_final"), rootmap_schema
-    )
-    # broadcast BY HINT, not by AQE: rootmap is mapInPandas output (no
-    # stats, so AQE plans a sort-merge join — two extra exchanges,
-    # A/B-measured +0.6 s at sf0.1), and it is root-graph-sized by
-    # construction — the same bound the merge task's dict already
-    # requires to fit one executor, so the broadcast adds no new ceiling
-    out = (
-        node_roots.join(F.broadcast(rootmap), node_roots["_min_r"] == rootmap["_root"])
-        .select(
-            F.col("src").alias("doc_id"),
-            F.col("_final").alias("component_id"),
-        )
-    )
-    return release_when_unreachable(out, _cc_cache)
 
 
 def connected_components(
@@ -1308,28 +1279,25 @@ def connected_components(
     graphs are not. Raise ``max_iterations`` if one ever shows up rather
     than switching the default.
 
-    Default routing (``checkpoint_dir=None``, ``driver_max_edges=None``):
-    the LAZY two-phase contraction path — see
-    :func:`_contracted_components`. r10's driver union-find fast path
-    (count-gate + Arrow collect) was value-identical but EAGER: the
-    gate's count and the collect ran the entire upstream pair-generation
-    chain at DataFrame-construction time (VERDICT r11 item 2 — bench
-    measured 14.2 s of construction-time jobs on PIPE-CORPUS's critical
-    path, invisible to stage attribution and paid even by callers who
-    never run the frame). The contraction path runs the same exact
-    union-find INSIDE the plan (per-partition local forests → one merge
-    task), so construction is free, the work lands on executors, and
-    the merge task holds O(dup nodes) instead of the driver holding
-    O(edges). Labels are identical (min-id; pinned in tests).
+    Routing (every route yields the same labels: min id, pinned in tests):
 
-    ``driver_max_edges`` stays as the routing knob it always was, never
-    a semantics knob: ``0`` forces the distributed label loop; a
-    positive bound count-gates the SYMMETRIZED edge list (eager — the
-    caller is explicitly buying a routing decision) and routes
-    under-bound graphs to the contraction path, over-bound graphs to
-    the loop. Durable ``checkpoint_dir`` runs always take the loop
-    (that flag is the caller saying "cluster posture, executor loss
-    expected, no single merge task").
+    - **Default** (``checkpoint_dir=None``, ``driver_max_edges=None``):
+      the LAZY two-phase contraction, :func:`_contracted_components` —
+      per-partition local forests, then ONE ``repartition(1)`` merge
+      task that emits the labels. Zero construction-time jobs and zero
+      driver state (a driver-side union-find would run the whole
+      upstream pair chain at DataFrame-construction time).
+      Single-task bound: the merge task holds one dict entry per
+      distinct dup node, O(dup nodes), on one executor.
+    - **Past that bound** — pass ``checkpoint_dir``: durable runs always
+      take the distributed label loop above, which has per-round
+      parquet state and no single-task step (the caller is saying
+      "cluster posture, executor loss expected").
+    - ``driver_max_edges`` is a routing knob, never a semantics knob:
+      ``0`` forces the distributed loop; a positive bound count-gates
+      the SYMMETRIZED edge list (eager — the caller is explicitly
+      buying a routing decision) and sends under-bound graphs to the
+      contraction, over-bound graphs to the loop.
     """
     import uuid
 

@@ -130,6 +130,12 @@ class StageCache:
             for k, v in saved.items():
                 conf.set(k, v)
 
+    def adopt(self, other: "StageCache") -> None:
+        """Take over every frame ``other`` tracks: they release with
+        this cache from now on, and ``other`` is left empty."""
+        self._frames.extend(other._frames)
+        other._frames = []
+
     def release(self) -> None:
         frames, self._frames = self._frames, []
         for f in frames:

@@ -5,6 +5,13 @@ are the ones that matter at that scale and are harmless on ``local[*]``:
 
 - AQE on (runtime coalescing of shuffle partitions, skew-join splitting,
   dynamic join-strategy demotion to broadcast);
+- AQE coalescing also on for PERSISTED plans
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, off by
+  default in Spark): without it ``CacheManager`` plans every persist with
+  final-stage coalescing disabled, so a persisted ``groupBy`` keeps all
+  ``spark.sql.shuffle.partitions`` and every later read of it schedules
+  that many tasks over a few kilobytes. An explicit ``repartition(n)``
+  is never coalesced, so persists that ask for a width keep it;
 - explicit ``spark.sql.shuffle.partitions`` (sized by the caller; the
   reference's only concurrency knob was a hardcoded request limit of 5,
   /root/reference/etl.js:206 — ours is a real parallelism control);
@@ -50,6 +57,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # NB: spark.sql.parquet.aggregatePushdown is deliberately NOT set —
         # it only takes effect on the V2 parquet read path, and moving the

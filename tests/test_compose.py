@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import gc
 
+import pytest
 from pyspark.sql import functions as F
 
 from feasibility_etl_spark.plans.compose import (
@@ -14,6 +15,8 @@ from feasibility_etl_spark.plans.compose import (
     materialize_shared,
     release_when_unreachable,
 )
+
+from conftest import SF0001
 
 
 def _cache_empty(spark) -> bool:
@@ -139,3 +142,36 @@ def test_cut_lazy_runs_no_jobs_and_restores_conf(spark):
         assert leaf.agg(F.sum("v")).collect()[0][0] == 100 * 101 // 2
     finally:
         cache.release()
+
+
+def test_persisted_groupby_gets_aqe_coalescing(spark):
+    # session default canChangeCachedPlanOutputPartitioning=true: a
+    # persisted aggregate over a few rows is coalesced like any other
+    # shuffle instead of keeping every spark.sql.shuffle.partitions
+    # slot, so each later read of it schedules fewer tasks
+    cache = StageCache()
+    try:
+        agg = cache(spark.range(20).groupBy((F.col("id") % 3).alias("k")).count())
+        assert agg.count() == 3
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert agg.rdd.getNumPartitions() < n_shuffle
+    finally:
+        cache.release()
+
+
+@pytest.mark.parametrize("name", ["DEDUP-PRUNE", "DEDUP-PRUNE-BEST", "DEDUP-COMPONENTS"])
+def test_component_entries_keep_pair_stage_persists(spark, name):
+    """The component entries derive their result from the pair stage and
+    drop the pair frame on return. Their pair-stage persists must still
+    serve the result's action: the entry owns the cache, so the plan the
+    driver runs reads InMemoryRelations even after a collection."""
+    from feasibility_etl_spark.driver_queries import ALL_QUERIES
+
+    spark.catalog.clearCache()
+    result = ALL_QUERIES[name](spark, SF0001)
+    gc.collect()
+    plan = result._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" in plan
+    del result
+    gc.collect()
+    assert _cache_empty(spark)

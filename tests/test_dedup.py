@@ -145,6 +145,28 @@ def test_blocked_jaccard_branch_gate_parity_all_routings(spark):
         assert gated == lazy, f"branch_gate routing {name} diverged"
 
 
+def test_branch_gate_all_small_route_keeps_only_toks_cached(spark):
+    """On the all-small gate route nothing reads the (block, tok)
+    frequency table or the block-cost table after the gate's collect, so
+    both release right there: of the persists the gate job populated,
+    only the token table stays cached, in the caller's cache."""
+    from feasibility_etl_spark.plans.compose import StageCache
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    cache = StageCache()
+    try:
+        pairs = blocked_jaccard_pairs(
+            docs(spark), ["lang", "source"], threshold=0.1, cache=cache,
+            broadcast_routing=True, branch_gate=True,
+        )
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(new) == 1, f"gate route left {len(new)} persists cached"
+        assert pairs.count() > 0
+    finally:
+        cache.release()
+
+
 def test_simhash_buckets_exact_dups(spark):
     cands = {(r.id_a, r.id_b) for r in simhash_candidates(docs(spark)).collect()}
     assert (1, 2) in cands  # identical text → identical signature → all bands match
@@ -219,12 +241,12 @@ def test_connected_components_driver_and_distributed_paths_agree(spark):
 
 
 def test_connected_components_cross_partition_root_merge(spark):
-    """r13: the contracted-components path merges a ROOT graph, not the
-    node forest — every phase-1 task contributes local roots and the
-    final labels must unify them across partitions. Force the worst
-    case: a single long chain with every edge in its OWN partition, so
-    no local union-find sees more than one edge and correctness rests
-    entirely on the cross-partition root merge."""
+    """The contracted-components path unions per-partition local forests
+    in one merge task — every phase-1 task contributes its local
+    ``(node, root)`` edges and the merge must unify them across
+    partitions. Force the worst case: a single long chain with every
+    edge in its OWN partition, so no local union-find sees more than one
+    edge and correctness rests entirely on the cross-partition merge."""
     from feasibility_etl_spark.operators.dedup import connected_components
 
     n = 33
